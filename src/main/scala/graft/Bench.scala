@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import java.io.{FileWriter, PrintWriter}
+import java.nio.file.{Files, Paths}
 
 /** Bench harness: every SparkEntry query against SPARK_GRAFT_SF_DIR, timed
   * end-to-end through a `noop` sink so the FULL plan executes (a bare
@@ -40,11 +42,14 @@ import org.apache.spark.sql.functions._
   * preserved 1 of 123 per-query ratio lines — the calibration data the r8
   * protocol exists to produce was being thrown away. Every per-query line
   * (and the final summary) is therefore ALSO appended to
-  * [[detailPath]] (default `target/bench_detail.jsonl`, override via
-  * SPARK_GRAFT_BENCH_DETAIL). Committing that file per round
-  * (`BENCH_DETAIL_r{N}.jsonl`) makes the round-over-round ratio gate
-  * mechanical: `tools/bench_compare.py old.jsonl new.jsonl` prints every
-  * query whose ratio moved >1.5x.
+  * the paths chosen by [[detailPaths]] (default `target/bench_detail.jsonl`,
+  * override via SPARK_GRAFT_BENCH_DETAIL). Committing that file per round
+  * (`BENCH_DETAIL_r{N}_local.jsonl`) makes the round-over-round ratio gate
+  * mechanical: `sbt "runMain graft.BenchCompare old.jsonl new.jsonl"`
+  * prints every query whose ratio regressed past the gate.
+  *
+  * SUBSET RUNS: SPARK_GRAFT_BENCH_ONLY (comma-separated query names) times
+  * just those queries, with a calibration sample adjacent to each one.
   */
 object Bench {
 
@@ -52,7 +57,7 @@ object Bench {
     * codegen'd hash + modulo, one 1000-key shuffle, keyed agg. ~0.2-0.4 s
     * at 32 threads; exercises the same resources (CPU, shuffle exchange,
     * task scheduling) whose contention inflates the inventory queries. */
-  private def calibrate(spark: SparkSession): Double = {
+  private[graft] def calibrate(spark: SparkSession): Double = {
     val t0 = System.nanoTime()
     spark.range(0L, 8000000L, 1L, 32)
       .select((col("id") % 1000).as("k"), xxhash64(col("id")).as("h"))
@@ -64,6 +69,64 @@ object Bench {
   }
 
   private val CalEvery = 8 // one calibration sample per 8 queries (~+2 % runtime)
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
+  }
+
+  /** Untimed between-query teardown. BENCH HYGIENE (r12): session-lifetime
+    * localCheckpoint pins (the q134/q117 memoized derivations) plus
+    * per-query checkpoint blocks accumulate across a 285-query session —
+    * r11's full bench showed tail queries (q257, q164) inflated ~2× vs
+    * their isolated medians purely from held RDD blocks. Drop the memo maps
+    * FIRST (so no live DataFrame still references an unpersisted
+    * checkpoint), then clear the SQL cache and unpersist every tracked RDD.
+    * The next query's excluded warm-up pass re-derives whatever it needs,
+    * so measured medians keep their steady-state meaning.
+    *
+    * blocking = true: async cleanup was observed landing on the NEXT
+    * query's measured runs (r12 local: q258 runs [0.6, 2.0, 2.4] right
+    * after q257's checkpoint-heavy teardown); paying the removal between
+    * queries keeps it out of every median.
+    *
+    * DECLARED ARTIFACTS (r13): blocks pinned by graft.engine.Artifacts (PQ
+    * codebooks/codes — durable build-time index tables in production)
+    * survive the teardown; everything else is scratch and gets dropped.
+    * See Artifacts' scaladoc + BASELINE.md for the declaration and the r12
+    * full-bench evidence that per-run re-training both misprices the PQ
+    * family and starves its neighbors. */
+  private[graft] def teardown(spark: SparkSession): Unit = {
+    queries.Relational.clearShared()
+    queries.PipelineOps.clearShared()
+    spark.sharedState.cacheManager.clearCache()
+    val artifactIds = graft.engine.Artifacts.pinnedRddIds(spark)
+    spark.sparkContext.getPersistentRDDs
+      .filterNot { case (id, _) => artifactIds.contains(id) }
+      .values.foreach(_.unpersist(blocking = true))
+    // Full GC between queries: the r12 full-bench anomaly (q11 at 7.66 s /
+    // 16.7× right after the checkpoint-heavy q119, runs still ESCALATING
+    // 4.6→8.3 s, vs 1.12 s isolated) is collection debt from the
+    // predecessor's freed blocks landing inside the successor's measured
+    // window. Paying it here, outside every window, costs ~0.1 s/query and
+    // makes medians attributable to the query's own plan.
+    System.gc()
+  }
+
+  /** Where a run writes its detail lines. A full run writes the primary
+    * path plus a cpus-keyed mirror (r16, VERDICT item 2: r15's 8-core
+    * scaling run OVERWROTE the 32-core run's detail on the fixed path, so
+    * runs at different core counts each keep their own copy). A subset run
+    * writes one file, by default `target/bench_detail_only.jsonl`, so it
+    * can never overwrite a full run's detail or its mirror. */
+  private[graft] def detailPaths(
+      configured: Option[String], cpus: Int, subset: Boolean): Seq[String] =
+    if (subset) Seq(configured.getOrElse("target/bench_detail_only.jsonl"))
+    else {
+      val primary = configured.getOrElse("target/bench_detail.jsonl")
+      Seq(primary, primary.stripSuffix(".jsonl") + s"_c$cpus.jsonl")
+    }
 
   /** SELF-ADJUDICATION (r14): two straight rounds lost judge/builder
     * cycles to unflagged host-load phantoms (r12 q11; r13 q324, whose
@@ -83,9 +146,11 @@ object Bench {
     * annotation is the adjudication). */
   private val SpreadFlag = 3.0
 
-  /** Newest committed per-query detail (BENCH_DETAIL_r*_local.jsonl):
-    * name → (sec, ratio). The ratio is the round-over-round comparable
-    * number; seconds are kept for the annotation only.
+  /** Newest committed per-query detail (BENCH_DETAIL_r*_local.jsonl), read
+    * by [[BenchCompare.parse]] — so adjudication and the gate see the same
+    * number, the recheck where the committed run flagged a load suspect.
+    * The ratio is the round-over-round comparable number; seconds are kept
+    * for the annotation only.
     *
     * SF GUARD (r15, ADVICE): ratios are only comparable at the SAME scale
     * factor — a sf0.01 spot run compared against the committed sf0.1
@@ -93,8 +158,8 @@ object Bench {
     * detail file now opens with a `bench_meta` line recording its sfDir;
     * when the committed file's sf differs from the current run's, the
     * ratio-vs-committed adjudication is disabled (empty map — the
-    * within-triple spread check still runs). Committed files predating the
-    * meta line are all full sf0.1 runs (r9–r14), the documented default.
+    * within-triple spread check still runs). A file without the meta line
+    * (r9–r14; never the newest since r15) disables it too.
     *
     * CPUS GUARD (r16, VERDICT item 3): ratios are also only comparable at
     * the SAME core count — the driver's 8-core scaling run compared its
@@ -102,76 +167,33 @@ object Bench {
     * "suspects" (heavy queries legitimately take longer relative to the
     * CPU-bound calibration workload on fewer cores). `bench_meta` records
     * cpus; when the committed file's cpus differ from the current run's,
-    * the ratio-vs-committed adjudication is disabled the same way. Files
-    * predating the meta line are all 32-core runs, the driver's main
-    * contract. */
+    * the ratio-vs-committed adjudication is disabled the same way. */
   private def committedDetail(
-      sfDir: String, cpus: String): Map[String, (Double, Double)] = {
-    val re = """BENCH_DETAIL_r(\d+)_local\.jsonl""".r
-    val line =
-      """"bench_query":"([^"]+)","sec":([0-9.]+),"ratio":([0-9.]+)""".r
-    val metaRe = """"bench_meta":\{"sf":"([^"]+)"""".r
-    val cpusRe = """"bench_meta":\{.*?"cpus":(\d+)""".r
-    Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case re(n) => Some((n.toInt, f))
-        case _ => None
-      })
-      .sortBy(-_._1).headOption.map { case (_, f) =>
-        val src = scala.io.Source.fromFile(f)
-        try {
-          val lines = src.getLines().toList
-          val committedSf = lines.iterator
-            .flatMap(metaRe.findFirstMatchIn(_).map(_.group(1)))
-            .nextOption().getOrElse("/root/testdata/sf0.1")
-          val committedCpus = lines.iterator
-            .flatMap(cpusRe.findFirstMatchIn(_).map(_.group(1)))
-            .nextOption().getOrElse("32")
-          if (committedSf != sfDir || committedCpus != cpus)
-            Map.empty[String, (Double, Double)]
-          else lines.flatMap(line.findFirstMatchIn(_).map(m =>
-            m.group(1) -> (m.group(2).toDouble, m.group(3).toDouble))).toMap
-        } finally src.close()
-      }.getOrElse(Map.empty)
-  }
+      sfDir: String, cpus: Int): Map[String, BenchCompare.Entry] =
+    BenchCompare.newestCommitted().map(BenchCompare.readLines)
+      .filter(lines => BenchCompare.metaSf(lines).contains(sfDir) &&
+        BenchCompare.metaCpus(lines).contains(cpus.toString))
+      .map(BenchCompare.parse).getOrElse(Map.empty)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Optional subset for spot benches; a round's full run never sets it,
+    // so the per-round artifact always covers the full inventory.
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    only.foreach(_.diff(SparkEntry.queries.keySet)
+      .foreach(n => System.err.println(s"[bench] unknown query $n")))
+    val spark = GraftSession.local(cpus)
     // Per-query detail sink: stdout tail truncation loses the ratio lines
     // (r8 kept 1 of 123), so mirror every JSON line into a committed file.
-    val detailPath = sys.env.getOrElse(
-      "SPARK_GRAFT_BENCH_DETAIL", "target/bench_detail.jsonl")
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(detailPath).toAbsolutePath.getParent)
-    val detail = new java.io.PrintWriter(
-      new java.io.FileWriter(detailPath, /*append=*/ false), /*autoFlush=*/ true)
-    // CPUS-KEYED MIRROR (r16, VERDICT item 2): the detail path is fixed, so
-    // r15's 8-core scaling run OVERWROTE the 32-core run's per-query detail
-    // an hour after it was written and the round lost its driver-side
-    // per-query evidence (PERF_r15 n_common: 0). Every line is therefore
-    // ALSO written to `<detailPath minus .jsonl>_c${cpus}.jsonl` — runs at
-    // different core counts can never destroy each other's artifact, while
-    // the primary path keeps its contract for existing consumers.
-    val mirrorPath =
-      detailPath.stripSuffix(".jsonl") + s"_c$cpus.jsonl"
-    val mirror = new java.io.PrintWriter(
-      new java.io.FileWriter(mirrorPath, /*append=*/ false), /*autoFlush=*/ true)
-    def emit(line: String): Unit =
-      { println(line); detail.println(line); mirror.println(line) }
+    val sinks = detailPaths(sys.env.get("SPARK_GRAFT_BENCH_DETAIL"), cpus,
+      only.isDefined).map { p =>
+      Files.createDirectories(Paths.get(p).toAbsolutePath.getParent)
+      new PrintWriter(new FileWriter(p, /*append=*/ false), /*autoFlush=*/ true)
+    }
+    def emit(line: String): Unit = { println(line); sinks.foreach(_.println(line)) }
     // Meta header: records the run's scale factor so committedDetail's
     // sf guard (and the BenchRegressionSpec live gate) can refuse to
     // compare ratios across different scales. Ignored by every line
@@ -189,20 +211,11 @@ object Bench {
       }
     }
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
     // Calibration baseline: warm-up + median-of-3 before the first query.
     calibrate(spark)
     val calSamples = scala.collection.mutable.ArrayBuffer(
       median((1 to 3).map(_ => calibrate(spark))))
     var sinceCal = 0
-    // Optional subset (builder-side spot benches; the driver never sets
-    // it, so the per-round artifact always covers the full inventory).
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val committed = committedDetail(sfDir, cpus)
     // Subset mode samples calibration per-QUERY: r13's judge adjudication
     // ran 7 queries against ONE baseline sample (cal n=1) — outlier
@@ -234,43 +247,7 @@ object Bench {
       val warm = run() // excluded warm-up
       val times: Seq[Option[Double]] = (1 to iters).map(_ => run())
       val ok = times.flatten
-      // BENCH HYGIENE (r12): session-lifetime localCheckpoint pins (the
-      // q134/q117 memoized derivations) plus per-query checkpoint blocks
-      // accumulate across a 285-query session — r11's driver bench showed
-      // tail queries (q257, q164) inflated ~2× vs their isolated medians
-      // purely from held RDD blocks. Drop the memo maps FIRST (so no live
-      // DataFrame still references an unpersisted checkpoint), then clear
-      // the SQL cache and unpersist every tracked RDD. The next query's
-      // excluded warm-up pass re-derives whatever it needs, so measured
-      // medians keep their steady-state meaning.
-      // blocking = true: async cleanup was observed landing on the NEXT
-      // query's measured runs (r12 local: q258 runs [0.6, 2.0, 2.4]
-      // right after q257's checkpoint-heavy teardown); paying the
-      // removal between queries keeps it out of every median.
-      // DECLARED ARTIFACTS (r13): blocks pinned by graft.engine.Artifacts
-      // (PQ codebooks/codes — durable build-time index tables in
-      // production) survive the teardown; everything else is scratch and
-      // gets dropped. See Artifacts' scaladoc + BASELINE.md for the
-      // declaration and the r12 driver evidence that per-run re-training
-      // both misprices the PQ family and starves its neighbors.
-      def teardown(): Unit = {
-        queries.Relational.clearShared()
-        queries.PipelineOps.clearShared()
-        spark.sharedState.cacheManager.clearCache()
-        val artifactIds = graft.engine.Artifacts.pinnedRddIds(spark)
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => artifactIds.contains(id) }
-          .values.foreach(_.unpersist(blocking = true))
-        // Full GC between queries: the r12 driver anomaly (q11 at 7.66 s /
-        // 16.7× right after the checkpoint-heavy q119, runs still
-        // ESCALATING 4.6→8.3 s, vs 1.12 s isolated) is collection debt from
-        // the predecessor's freed blocks landing inside the successor's
-        // measured window. Paying it here, outside every window, costs
-        // ~0.1 s/query and makes medians attributable to the query's own
-        // plan.
-        System.gc()
-      }
-      teardown()
+      teardown(spark)
       val runs = times.map(_.map(f3).getOrElse("null")).mkString("[", ",", "]")
       val cal = calSamples.last
       val med = if (ok.nonEmpty) Some(median(ok)) else None
@@ -282,7 +259,7 @@ object Bench {
         ok.max / ok.min > SpreadFlag && ok.max >= 0.3
       val cm = committed.get(name)
       val ratioSuspect = (med, cm) match {
-        case (Some(m), Some((cSec, cRatio))) =>
+        case (Some(m), Some(BenchCompare.Entry(cRatio, cSec))) =>
           m / cal > 2 * cRatio && m - cSec >= 0.3
         case _ => false
       }
@@ -304,7 +281,7 @@ object Bench {
           run()
           val c = calibrate(spark)
           val r = run()
-          teardown()
+          teardown(spark)
           (Some(c), r)
         } else (None, None)
       val sec = med.map(f3).getOrElse("null")
@@ -318,8 +295,8 @@ object Bench {
         recheckCal.foreach(c => sb ++= s""","recheck_cal":${f3(c)}""")
         for (r <- recheckSec; c <- recheckCal)
           sb ++= s""","recheck_ratio":${f3(r / c)}"""
-        cm.foreach { case (cSec, cRatio) =>
-          sb ++= s""","committed_sec":${f3(cSec)},"committed_ratio":${f3(cRatio)}"""
+        cm.foreach { c =>
+          sb ++= s""","committed_sec":${f3(c.sec)},"committed_ratio":${f3(c.ratio)}"""
         }
         sb.toString
       }
@@ -356,8 +333,7 @@ object Bench {
     // Summary stays <1.5 KB and is the absolute last stdout line so the
     // driver's tail capture always ends with a complete JSON record.
     emit(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${good.size},"cal":$calJson,"failed":${names(failed)},"flaky":${names(flaky)},$suspectJson,"slowest":$slowest,"slowest_ratio":$slowestRatio}""")
-    detail.close()
-    mirror.close()
+    sinks.foreach(_.close())
     spark.stop()
   }
 }

@@ -2,11 +2,10 @@ package graft
 
 /** Round-over-round bench REGRESSION GATE (r13, VERDICT item 3).
   *
-  * `tools/bench_compare.py` existed as a loose tool since r9; r12 proved
-  * regressions land silently without a gate in the build (five queries got
-  * 1.3–1.7× slower and only the judge noticed). This is the same
-  * comparison as the tool — per-query calibration RATIOS, the
-  * host-load-invariant number — wired into ScalaTest
+  * r12 proved regressions land silently without a gate in the build (five
+  * queries got 1.3–1.7× slower and only the judge noticed). This compares
+  * per-query calibration RATIOS — the host-load-invariant number — and is
+  * wired into ScalaTest
   * (`BenchRegressionSpec`): after any local bench run that leaves
   * `target/bench_detail.jsonl`, `sbt test` fails if a query regressed more
   * than [[DefaultThreshold]]× vs the newest committed
@@ -16,12 +15,15 @@ package graft
   *   - only SLOWER counts — getting faster is never a failure;
   *   - sub-second noise doesn't trip it: a flagged query must also be at
   *     least [[MinDeltaSec]] slower in absolute seconds, because a 0.05 →
-  *     0.12 s scalar query is scheduler jitter, not a plan regression;
+  *     0.12 s scalar query is scheduler jitter, not a plan regression, and
+  *     must have cost [[MinBaseSec]] in the baseline unless it slowed by
+  *     [[SubFloorEscapeSec]] or more;
   *   - queries present on only one side are reported, never failed
   *     (inventory growth is normal; a DROPPED query is Verify's job).
   *
   * Also runnable standalone: `sbt "runMain graft.BenchCompare old.jsonl
-  * new.jsonl"` — exits 1 on regression, mirroring the python tool.
+  * new.jsonl [threshold]"` — prints every regression and the queries
+  * present on one side only, and exits 1 on regression.
   */
 object BenchCompare {
 
@@ -37,6 +39,13 @@ object BenchCompare {
     * (OPTIMIZATION_r15 §1: 250 queries <0.5 s, coreUtil ≤0.05) where ratios
     * measure the scheduler, not the plan. */
   val MinBaseSec = 0.5
+
+  /** Absolute escape from [[MinBaseSec]]: a sub-floor query whose ratio
+    * passes the threshold and that slowed by at least this many seconds
+    * still fails the gate. Scheduler jitter on a sub-half-second query
+    * stays well under it (q219's phantom was +0.48 s); a plan that turns a
+    * 0.1 s query into a multi-second one does not. */
+  val SubFloorEscapeSec = 5.0
 
   final case class Entry(ratio: Double, sec: Double)
   final case class Regression(
@@ -66,8 +75,7 @@ object BenchCompare {
   }
 
   /** Parse a detail file's lines into query → (ratio, sec); tolerates the
-    * summary line, failed queries ("sec":null) and truncated tails, like
-    * the python tool.
+    * summary line, failed queries ("sec":null) and truncated tails.
     *
     * ADJUDICATION-AWARE (r15, VERDICT item 7): a line the bench flagged
     * `load_suspect` carries a clean-window re-measurement
@@ -105,17 +113,37 @@ object BenchCompare {
     lines.flatMap(l =>
       if (l.contains("\"bench_meta\"")) field(l, "cpus") else None).headOption
 
+  /** The newest committed round detail, `BENCH_DETAIL_r{N}_local.jsonl`
+    * with the highest N, in the working directory. */
+  def newestCommitted(): Option[java.io.File] = {
+    val re = """BENCH_DETAIL_r(\d+)_local\.jsonl""".r
+    Option(new java.io.File(".").listFiles()).toSeq.flatten
+      .flatMap(f => f.getName match {
+        case re(n) => Some(n.toInt -> f)
+        case _ => None
+      })
+      .sortBy(-_._1).headOption.map(_._2)
+  }
+
+  def readLines(f: java.io.File): Seq[String] = {
+    val src = scala.io.Source.fromFile(f)
+    try src.getLines().toList finally src.close()
+  }
+
   /** The gate: common queries whose ratio regressed more than `threshold`×
-    * AND slowed by at least `minDeltaSec` absolute seconds AND cost at
-    * least `minBaseSec` in the committed baseline (see [[MinBaseSec]]). */
+    * AND slowed by at least `minDeltaSec` absolute seconds AND either cost
+    * at least `minBaseSec` in the committed baseline (see [[MinBaseSec]])
+    * or slowed by at least [[SubFloorEscapeSec]]. */
   def regressions(old: Map[String, Entry], next: Map[String, Entry],
       threshold: Double = DefaultThreshold,
       minDeltaSec: Double = MinDeltaSec,
       minBaseSec: Double = MinBaseSec): Seq[Regression] =
     (old.keySet & next.keySet).toSeq.sorted.flatMap { q =>
       val (o, n) = (old(q), next(q))
+      val delta = n.sec - o.sec
       if (o.ratio > 0 && n.ratio > o.ratio * threshold &&
-          n.sec - o.sec >= minDeltaSec && o.sec >= minBaseSec)
+          delta >= minDeltaSec &&
+          (o.sec >= minBaseSec || delta >= SubFloorEscapeSec))
         Some(Regression(q, o.ratio, n.ratio, o.sec, n.sec))
       else None
     }.sortBy(-_.factor)
@@ -123,18 +151,18 @@ object BenchCompare {
   def main(args: Array[String]): Unit = {
     val threshold =
       if (args.length > 2) args(2).toDouble else DefaultThreshold
-    def read(p: String): Seq[String] = {
-      val src = scala.io.Source.fromFile(p)
-      try src.getLines().toList finally src.close()
-    }
-    val old = parse(read(args(0)))
-    val next = parse(read(args(1)))
+    val old = parse(readLines(new java.io.File(args(0))))
+    val next = parse(readLines(new java.io.File(args(1))))
     val regs = regressions(old, next, threshold)
     println(s"compared ${(old.keySet & next.keySet).size} queries " +
       s"(old=${old.size}, new=${next.size}, threshold=${threshold}x, " +
       s"minDelta=${MinDeltaSec}s)")
     regs.foreach(r => println(s"  REGRESSION $r"))
     if (regs.isEmpty) println("  no query regressed past the gate")
+    def oneSided(label: String, qs: Set[String]): Unit =
+      if (qs.nonEmpty) println(s"  $label: ${qs.toSeq.sorted.mkString(", ")}")
+    oneSided("dropped from new run", old.keySet -- next.keySet)
+    oneSided("new this run", next.keySet -- old.keySet)
     if (regs.nonEmpty) sys.exit(1)
   }
 }

@@ -8,6 +8,11 @@ import java.nio.file.{Files, Paths}
   * the at-scale design evidence (pushdown, broadcasts, partial aggregation,
   * bucket co-location, partition pruning, native expressions) in one
   * reviewable artifact. Run: `sbt "runMain graft.Plans"`.
+  *
+  * With query names (`sbt "runMain graft.Plans q46_minhash_lsh …"`) it
+  * prints those queries' formatted plans instead and writes nothing. Both
+  * modes read SPARK_GRAFT_SF_DIR (default sf0.001) and run at `local[8]`,
+  * so partition counts in the committed plans do not vary with the host.
   */
 object Plans {
   // PlanDriftSpec re-derives each of these plans and compares the node
@@ -199,27 +204,32 @@ object Plans {
     case n => SparkEntry.queries(n)(s, dir)
   }
 
+  /** The formatted physical plan of a flagship (or any inventory) query. */
+  private[graft] def formatted(name: String, s: SparkSession,
+      dir: String): String =
+    flagshipDf(name, s, dir).queryExecution
+      .explainString(ExplainMode.fromString("formatted")).trim
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of flagship queries\n\n")
-    sb.append(s"Generated by `graft.Plans` against `$sfDir`. These are the\n")
-    sb.append("plan shapes the engine is designed around; PlanSpec pins the\n")
-    sb.append("load-bearing properties in CI.\n")
-    flagship.foreach { case (name, why) =>
-      val df = flagshipDf(name, spark, sfDir)
-      sb.append(s"\n## $name — $why\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        ExplainMode.fromString("formatted")).trim)
-      sb.append("\n```\n")
+    val spark = GraftSession.local(8)
+    if (args.nonEmpty) args.foreach { name =>
+      println(s"===== $name =====")
+      println(formatted(name, spark, sfDir))
+    } else {
+      val sb = new StringBuilder
+      sb.append("# PLANS — formatted physical plans of flagship queries\n\n")
+      sb.append(s"Generated by `graft.Plans` against `$sfDir`. These are the\n")
+      sb.append("plan shapes the engine is designed around; PlanSpec pins the\n")
+      sb.append("load-bearing properties in CI.\n")
+      flagship.foreach { case (name, why) =>
+        sb.append(s"\n## $name — $why\n\n```\n")
+        sb.append(formatted(name, spark, sfDir))
+        sb.append("\n```\n")
+      }
+      Files.writeString(Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${sb.length} chars)")
     }
-    Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${sb.length} chars)")
     spark.stop()
   }
 }

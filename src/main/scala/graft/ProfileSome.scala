@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Dev tool (r15 optimization round): per-query job/stage/task accounting.
@@ -19,16 +18,8 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 object ProfileSome {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cpus
+    val spark = GraftSession.local(cpus)
     Tables.names.foreach(n => Tables.ld(spark, sfDir, n).count())
 
     val jobs = new AtomicInteger; val stages = new AtomicInteger
@@ -81,8 +72,7 @@ object ProfileSome {
         Thread.sleep(300); reset()
         val wall = run()
         Thread.sleep(300) // let the bus drain before reading counters
-        val cores = cpus.toInt
-        val util = taskMs.get() / 1000.0 / (wall * cores)
+        val util = taskMs.get() / 1000.0 / (wall * cpus)
         println(f"PROFILE $name wall=$wall%.2fs jobs=${jobs.get()}%d " +
           f"stages=${stages.get()}%d tasks=${tasks.get()}%d " +
           f"taskTime=${taskMs.get() / 1000.0}%.2fs " +
@@ -94,14 +84,7 @@ object ProfileSome {
       } catch { case e: Throwable =>
         println(s"PROFILE $name FAILED: ${e.getMessage}")
       }
-      // Same hygiene as Bench between queries
-      queries.Relational.clearShared()
-      queries.PipelineOps.clearShared()
-      spark.sharedState.cacheManager.clearCache()
-      val artifactIds = graft.engine.Artifacts.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => artifactIds.contains(id) }
-        .values.foreach(_.unpersist(blocking = true))
+      Bench.teardown(spark)
     }
     spark.stop()
   }

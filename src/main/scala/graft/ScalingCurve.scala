@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Usage: runMain graft.ScalingCurve [baseSfDir] [outRoot] [factor]
   *   defaults: /root/testdata/sf0.1  target/scaling  8
-  * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_SCALING_QUERIES
+  * Env: SPARK_GRAFT_CPUS (default: all cores), SPARK_GRAFT_SCALING_QUERIES
   * (comma list; default = the r13 tail five), SPARK_GRAFT_SCALING_DETAIL
   * (default target/scaling_detail.jsonl; commit per round as
   * SCALING_r{N}.jsonl).
@@ -119,19 +119,10 @@ object ScalingCurve {
     val baseDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outRoot = args.lift(1).getOrElse("target/scaling")
     val factor = args.lift(2).map(_.toInt).getOrElse(8)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val qNames = sys.env.get("SPARK_GRAFT_SCALING_QUERIES")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(DefaultQueries)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val detailPath = sys.env.getOrElse(
       "SPARK_GRAFT_SCALING_DETAIL", "target/scaling_detail.jsonl")
     java.nio.file.Files.createDirectories(
@@ -159,39 +150,16 @@ object ScalingCurve {
     val dirs = Seq(1 -> buildDir(1), factor -> buildDir(factor))
 
     // ---- measurement: Bench's discipline (warm + 3, teardown, cal) ----
-    def teardown(): Unit = {
-      graft.queries.Relational.clearShared()
-      graft.queries.PipelineOps.clearShared()
-      spark.sharedState.cacheManager.clearCache()
-      val keep = graft.engine.Artifacts.pinnedRddIds(spark)
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep.contains(id) }
-        .values.foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    def calibrate(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, 32)
-        .select((col("id") % 1000).as("k"), xxhash64(col("id")).as("h"))
-        .groupBy("k").agg(avg("h").as("a"), max("h").as("m"),
-          count(lit(1)).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    calibrate() // JVM/codegen warm-up for the calibration plan itself
+    import Bench.{calibrate, median, teardown}
+    calibrate(spark) // JVM/codegen warm-up for the calibration plan itself
     val slopes = qNames.flatMap { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
       // x1 and xF adjacently, each with its own calibration sample, so a
       // host-load drift inflates both sides of the slope together
       val meds = dirs.map { case (f, dir) =>
-        teardown()
-        val cal = calibrate()
+        teardown(spark)
+        val cal = calibrate(spark)
         def run(): Option[Double] = {
           val t0 = System.nanoTime()
           try {
@@ -205,7 +173,7 @@ object ScalingCurve {
         }
         val warm = run()
         val ok = (1 to 3).flatMap(_ => run())
-        teardown()
+        teardown(spark)
         val med = if (ok.nonEmpty) Some(median(ok)) else None
         emit(s"""{"scaling_query":"$name","scale":$f,"sec":${
           med.map(f3).getOrElse("null")},"cal":${f3(cal)},"warm":${

@@ -1,24 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  *
+  * `Verify <sfDir> <outDir> [names…]`: with query names, dumps just those
+  * (same layout; oracle_sql.json keeps ALL oracles, which
+  * `tools/check.py <outDir> <sfDir> <names>` filters by name). */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sfDir = args(0); val outDir = args(1)
+    val queries = SparkEntry.queries
+    val names = if (args.length > 2) args.toSeq.drop(2) else queries.keys.toSeq
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // Failures are first-class: r10's fixture regression silently dropped 22
     // rows from the correctness artifact (stderr-only), which read as
@@ -26,8 +19,8 @@ object Verify {
     // query lands in _failed.json (empty object on a clean run) so breakage
     // can never again masquerade as a coverage choice.
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -58,7 +51,7 @@ object Verify {
     case c => c.toString
   } + "\""
 
-  /** Dump SparkEntry.oracleSql as JSON (shared with VerifyOne).
+  /** Dump SparkEntry.oracleSql as JSON.
     * JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness. */

@@ -28,15 +28,6 @@ object EventOps {
   private[queries] lazy val dfaAllowedValues: String = dfaAllowed
     .map { case (f, t) => s"('$f', '$t')" }.mkString(", ")
 
-  /** Streaming state-store provider selector (r16): `rocksdb` (default —
-    * the 100 TB production provider, and what every committed bench number
-    * was measured with) or `hdfs` (Spark's in-heap store — lower fixed
-    * startup cost per query at toy state sizes, unsafe once state outgrows
-    * executor heap). Read from the parent session's runtime conf inside
-    * [[withStreamSession]]. */
-  private[graft] val StateStoreProviderConf =
-    "spark.graft.streaming.stateStore"
-
   /** Run `f` against a CLONED session (`s.newSession()`: shared
     * SparkContext and persistent catalog, ISOLATED runtime conf and temp
     * views) whose spark.sql.shuffle.partitions is fixed at `n`. Stateful
@@ -74,33 +65,15 @@ object EventOps {
     // q85 at 4 partitions regressed to 2.93 s (8 kept). The ~0.3 s is
     // fixed native-store startup across 16 tiny stores — the price of the
     // config that survives state > heap; at real volume it inverts.
-    //
-    // r16: the provider is now a conf (`spark.graft.streaming.stateStore`,
-    // read from the PARENT session so callers can set it with
-    // spark.conf.set) — `rocksdb` (default, the production choice and the
-    // committed bench configuration) or `hdfs` (Spark's in-heap default
-    // store: ~0.3-0.4 s less fixed cost per streaming query at THIS corpus,
-    // the right pick only when total state provably fits executor heap).
-    // The default keeps every bench/oracle run on the 100 TB-honest
-    // provider — this knob documents the trade-off, it does not move the
-    // committed numbers.
-    val provider = s.conf.getOption(StateStoreProviderConf)
-      .getOrElse("rocksdb")
-    provider match {
-      case "rocksdb" =>
-        ss.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        // Changelog checkpointing: commit the per-batch delta instead of a
-        // full RocksDB snapshot upload — the production default for
-        // frequent microbatches, and it trims the per-batch fixed cost
-        // that dominates at this corpus size.
-        ss.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      case "hdfs" => // Spark's built-in default provider; nothing to set
-      case other => throw new IllegalArgumentException(
-        s"$StateStoreProviderConf must be 'rocksdb' or 'hdfs', got '$other'")
-    }
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+    // Changelog checkpointing: commit the per-batch delta instead of a
+    // full RocksDB snapshot upload — the production default for frequent
+    // microbatches, and it trims the per-batch fixed cost that dominates
+    // at this corpus size.
+    ss.conf.set("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled", "true")
     f(ss)
   }
 

@@ -125,20 +125,6 @@ object GraphOps {
       .select(col("doc_id"),
         least(col("doc_id"), col("nbr_min")).as("cluster_id"))
       .transform(cut)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    // Debug-only job counter proving the one-action-per-round claim below:
-    // GRAFT_CC_DEBUG prints the job-start delta per round (listener bus is
-    // async, so a boundary job can land a line late, but steady-state
-    // rounds print jobs=1).
-    val jobCount = new java.util.concurrent.atomic.AtomicInteger
-    if (debug)
-      edges.sparkSession.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-            jobCount.incrementAndGet(); ()
-          }
-        })
     var changed = 1L; var iters = 0
     while (changed > 0 && iters < MaxRounds) {
       // ONE action per round: the convergence count rides the checkpoint
@@ -150,7 +136,6 @@ object GraphOps {
       // SYNCHRONOUSLY from the executed plan's accumulators
       // (observedMetrics) — not via Observation.get, which would block on
       // the async listener bus once per round.
-      val jobsBefore = jobCount.get()
       // (r8 experiment, rejected: a SECOND pointer jump per round — one
       // more label-sized join — did not reduce the round count on either
       // the spec graphs or the sf0.1 corpus: the slow tail is nbrMin
@@ -212,9 +197,6 @@ object GraphOps {
       }
       labels = cp.select(col("doc_id"), col("new_cid").as("cluster_id"))
       iters += 1
-      if (debug)
-        System.err.println(s"[cc] round $iters changed=$changed " +
-          s"jobs=${jobCount.get() - jobsBefore}")
     }
     // The 30-round cap bounds pathological chains; hitting it means the
     // returned labels are NOT a converged fixpoint — surface that loudly

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    absolute-delta floor) MUST hold.
   *
   * 2. The live gate: when a fresh local bench detail exists
-  *    (`target/bench_detail.jsonl`, written by every `graft.Bench` run)
+  *    (`target/bench_detail.jsonl`, written by every full `graft.Bench` run)
   *    AND it covers a meaningful slice of the inventory, every common
   *    query is compared against the newest committed
   *    `BENCH_DETAIL_r*_local.jsonl`; any >2× ratio regression that also
@@ -94,6 +94,29 @@ class BenchRegressionSpec extends AnyFunSuite {
     assert(BenchCompare.regressions(old2, next2).map(_.query) == Seq("q_real"))
   }
 
+  test("a multi-second slowdown fails the gate even under the floor") {
+    // MinBaseSec must not make the gate blind: 0.13 -> 6.0 s is a plan
+    // regression, not scheduler jitter, whatever the committed cost was...
+    val old = BenchCompare.parse(Seq(line("q_tiny", 0.13, 0.26)))
+    val next = BenchCompare.parse(Seq(line("q_tiny", 6.0, 12.0)))
+    assert(BenchCompare.regressions(old, next).map(_.query) == Seq("q_tiny"))
+    // ...while q219's +0.48 s phantom stays shielded by the floor.
+    val old2 = BenchCompare.parse(Seq(line("q219_tiny", 0.129, 0.262)))
+    val next2 = BenchCompare.parse(Seq(line("q219_tiny", 0.611, 1.222)))
+    assert(BenchCompare.regressions(old2, next2).isEmpty)
+  }
+
+  test("a subset bench run never writes a full run's detail or its mirror") {
+    for (configured <- Seq(None, Some("target/spot.jsonl"))) {
+      val paths = Bench.detailPaths(configured, 8, subset = true)
+      assert(paths.size == 1, paths)
+      assert(!paths.contains("target/bench_detail.jsonl"), paths)
+      assert(!paths.exists(_.matches(""".*_c\d+\.jsonl""")), paths)
+    }
+    assert(Bench.detailPaths(None, 8, subset = false) ==
+      Seq("target/bench_detail.jsonl", "target/bench_detail_c8.jsonl"))
+  }
+
   test("metaCpus reads the bench_meta header; absent pre-r15 means 32") {
     val lines = Seq(
       """{"bench_meta":{"sf":"/root/testdata/sf0.1","iters":3,"cpus":8}}""",
@@ -113,18 +136,11 @@ class BenchRegressionSpec extends AnyFunSuite {
 
   test("live gate: fresh local detail vs newest committed round detail") {
     val fresh = new java.io.File("target/bench_detail.jsonl")
-    val committed = Option(new java.io.File(".").listFiles()).toSeq.flatten
-      .filter(f => f.getName.matches("BENCH_DETAIL_r\\d+_local\\.jsonl"))
-      .sortBy(_.getName)
-      .lastOption
+    val committed = BenchCompare.newestCommitted()
     assume(fresh.exists() && committed.nonEmpty,
       "no fresh target/bench_detail.jsonl — gate activates after a bench run")
-    def read(f: java.io.File): Seq[String] = {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().toList finally src.close()
-    }
-    val oldLines = read(committed.get)
-    val freshLines = read(fresh)
+    val oldLines = BenchCompare.readLines(committed.get)
+    val freshLines = BenchCompare.readLines(fresh)
     // Ratios are only comparable at the same scale factor (r15, ADVICE):
     // a sf0.01 spot run gated against the committed sf0.1 detail compares
     // incomparable ratios. Pre-meta committed files are all sf0.1.
@@ -148,8 +164,9 @@ class BenchRegressionSpec extends AnyFunSuite {
         "cross-cpus ratios are not comparable, gate not meaningful")
     val old = BenchCompare.parse(oldLines)
     val next = BenchCompare.parse(freshLines)
-    // Spot benches (SPARK_GRAFT_BENCH_ONLY) leave tiny details; gating a
-    // 3-query spot file against the round artifact is meaningless.
+    // A spot bench (SPARK_GRAFT_BENCH_ONLY) pointed at this path through
+    // SPARK_GRAFT_BENCH_DETAIL leaves a tiny detail; gating a 3-query spot
+    // file against the round artifact is meaningless.
     assume((old.keySet & next.keySet).size >= 25,
       s"fresh detail covers ${(old.keySet & next.keySet).size} common " +
         "queries (<25) — spot bench, gate not meaningful")

@@ -10,18 +10,28 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class ExtensionsSpec extends AnyFunSuite {
 
+  test("GraftSession.local: v2 bucketing on, UTC, shuffle partitions = " +
+    "cpus, and the injected graft_dot resolves in SQL") {
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val s = GraftSession.local(2)
+    try {
+      assert(s.conf.get("spark.sql.sources.v2.bucketing.enabled") == "true")
+      assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+      assert(s.conf.get("spark.sql.shuffle.partitions") == "2")
+      assert(s.sql("SELECT graft_dot(array(1.0d), array(2.0d))")
+        .head().getDouble(0) == 2.0)
+    } finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
   test("injectOptimizerRule fires: upper(upper(x)) collapses in " +
     "optimizedPlan; injected graft_dot is SQL-callable") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-ext-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = GraftSession.local(2)
     try {
       // parquet source (not a local relation) so ConvertToLocalRelation
       // can't erase the projection before our rule is observable
@@ -62,14 +72,7 @@ class ExtensionsSpec extends AnyFunSuite {
     "(equal-ts visible, no-match null, carry across left rows)") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-asof-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = GraftSession.local(2)
     try {
       import s.implicits._
       val left = Seq((1L, 10L, "a"), (1L, 20L, "b"), (2L, 5L, "c"))
@@ -129,14 +132,7 @@ class ExtensionsSpec extends AnyFunSuite {
     "would call that ambiguous), and stock SQL still parses untouched") {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-parser-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
+    val s = GraftSession.local(2)
     try {
       import s.implicits._
       // both sides deliberately name the key "k" and the time "t"

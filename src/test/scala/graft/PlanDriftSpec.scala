@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-drift gate: every flagship plan in the committed PLANS.md must
@@ -39,8 +38,7 @@ class PlanDriftSpec extends AnyFunSuite with SparkFixture {
       val codeStart = committed.indexOf("```", start)
       val codeEnd = committed.indexOf("```", codeStart + 3)
       val want = shape(committed.substring(codeStart + 3, codeEnd))
-      val got = shape(Plans.flagshipDf(name, spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted")))
+      val got = shape(Plans.formatted(name, spark, sfDir))
       assert(got == want,
         s"""$name physical plan drifted from the committed shape.
            |If intentional: sbt "runMain graft.Plans", review, commit.

@@ -5,18 +5,7 @@ import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One session per suite; local[4] keeps test latency low. */
 trait SparkFixture extends BeforeAndAfterAll { self: Suite =>
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-      // Declared session default: q309's SPJ demo needs it live at
-      // physical-planning time (the caller's action), so it cannot be
-      // scoped per-query; default-on makes it variance-free across queries.
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-    .withExtensions(new graft.plans.GraftExtensions)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   override def afterAll(): Unit = {
     // Session is shared process-wide (getOrCreate); don't stop between
