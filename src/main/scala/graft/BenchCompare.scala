@@ -1,5 +1,7 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
 /** Round-over-round bench REGRESSION GATE (r13, VERDICT item 3).
   *
   * r12 proved regressions land silently without a gate in the build (five
@@ -57,22 +59,24 @@ object BenchCompare {
         f"sec $oldSec%.3f -> $newSec%.3f)"
   }
 
-  /** Minimal field extraction — the detail lines are flat JSON objects we
-    * write ourselves; a full JSON parser is not warranted for two numeric
-    * fields and a name (and build.sbt deliberately has no JSON dep). */
-  private def field(line: String, name: String): Option[String] = {
-    val k = "\"" + name + "\":"
-    val i = line.indexOf(k)
-    if (i < 0) return None
-    val rest = line.substring(i + k.length)
-    if (rest.startsWith("\"")) {
-      val j = rest.indexOf('"', 1)
-      if (j < 0) None else Some(rest.substring(1, j))
-    } else {
-      val j = rest.indexWhere(c => c == ',' || c == '}')
-      if (j < 0) None else Some(rest.substring(0, j))
-    }
-  }
+  private val json = new ObjectMapper()
+
+  /** One detail line as a JSON object (Jackson, from the Spark jars); None
+    * for a truncated tail or any line that is not an object. */
+  private def obj(line: String): Option[JsonNode] =
+    scala.util.Try(json.readTree(line)).toOption.filter(_.isObject)
+
+  /** A scalar field as text; None when absent, JSON null or nested. */
+  private def text(o: JsonNode, name: String): Option[String] =
+    Option(o.get(name)).filter(n => n.isValueNode && !n.isNull).map(_.asText)
+
+  private def num(o: JsonNode, name: String): Option[Double] =
+    Option(o.get(name)).filter(_.isNumber).map(_.asDouble)
+
+  /** A field of the first `bench_meta` header line. */
+  private def meta(lines: Seq[String], name: String): Option[String] =
+    lines.iterator.flatMap(obj).flatMap(o => Option(o.get("bench_meta")))
+      .flatMap(text(_, name)).nextOption()
 
   /** Parse a detail file's lines into query → (ratio, sec); tolerates the
     * summary line, failed queries ("sec":null) and truncated tails.
@@ -86,22 +90,20 @@ object BenchCompare {
     * detail artifact keeps the median as the record of what was measured;
     * this parser substitutes the recheck only where one exists. */
   def parse(lines: Seq[String]): Map[String, Entry] =
-    lines.flatMap { line =>
-      val suspect = field(line, "load_suspect").contains("true")
-      def num(name: String): Option[Double] =
-        field(line, name).filter(_ != "null").map(_.toDouble)
+    lines.flatMap(obj).flatMap { o =>
+      val suspect = text(o, "load_suspect").contains("true")
+      def pick(name: String): Option[Double] =
+        (if (suspect) num(o, s"recheck_$name") else None).orElse(num(o, name))
       for {
-        q <- field(line, "bench_query")
-        r <- (if (suspect) num("recheck_ratio") else None).orElse(num("ratio"))
-        s <- (if (suspect) num("recheck_sec") else None).orElse(num("sec"))
+        q <- text(o, "bench_query")
+        r <- pick("ratio")
+        s <- pick("sec")
       } yield q -> Entry(r, s)
     }.toMap
 
   /** The run's scale factor from the `bench_meta` header line (r15);
     * absent for pre-r15 committed details, which are all full sf0.1 runs. */
-  def metaSf(lines: Seq[String]): Option[String] =
-    lines.flatMap(l =>
-      if (l.contains("\"bench_meta\"")) field(l, "sf") else None).headOption
+  def metaSf(lines: Seq[String]): Option[String] = meta(lines, "sf")
 
   /** The run's core count from the `bench_meta` header line (r16); absent
     * for pre-r15 committed details, which are all 32-core driver-contract
@@ -109,9 +111,7 @@ object BenchCompare {
     * workload is embarrassingly parallel while many inventory queries are
     * not, so an 8-core run's ratios sit systematically above a 32-core
     * run's (r15: the driver's c8 pass mass-flagged 82 bogus suspects). */
-  def metaCpus(lines: Seq[String]): Option[String] =
-    lines.flatMap(l =>
-      if (l.contains("\"bench_meta\"")) field(l, "cpus") else None).headOption
+  def metaCpus(lines: Seq[String]): Option[String] = meta(lines, "cpus")
 
   /** The newest committed round detail, `BENCH_DETAIL_r{N}_local.jsonl`
     * with the highest N, in the working directory. */

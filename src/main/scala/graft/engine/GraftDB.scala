@@ -70,9 +70,10 @@ class GraftDB(val spark: SparkSession) {
     df
   }
 
-  /** Parquet source — superset (the driver corpus is parquet). */
+  /** Parquet source — superset (the driver corpus is parquet). The schema
+    * comes from the [[graft.Tables.schemaOf]] memo, as for `Tables.ld`. */
   def createParquetTable(name: String, path: String): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = spark.read.schema(graft.Tables.schemaOf(spark, path)).parquet(path)
     df.createOrReplaceTempView(name)
     df
   }

@@ -145,7 +145,7 @@ object EventOps {
     // from stop() interrupting an in-flight no-op microbatch). In production
     // this is writeStream.trigger(...).toTable with the identical plan.
     "q74_stream_hourly" -> ((s, d) => withStreamSession(s, 8) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       // The streaming file source wants a directory: list the sf dir but
       // glob-filter down to the single events file.
       val stream = ss.readStream.schema(rawSchema)
@@ -280,7 +280,7 @@ object EventOps {
     // First-seen row is arrival-order-dependent; the (user_id, event_type)
     // SET is not — so the rollup is deterministic and oracle-checkable.
     "q76_stream_dedup" -> ((s, d) => withStreamSession(s, 8) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       val name = "graft_stream_dedup"
       val q = ss.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -360,7 +360,7 @@ object EventOps {
     // how AvailableNow splits the backlog.
     "q78_stream_state" -> ((s, d) => withStreamSession(s, 8) { ss =>
       import ss.implicits._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       val name = "graft_stream_state"
       val counts = ss.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -425,7 +425,7 @@ object EventOps {
         .groupBy("user_id").agg(sum("value").as("spent"))
         .filter(col("spent") > 500)
         .select("user_id")
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       val name = "graft_stream_static"
       val q = ss.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -461,7 +461,7 @@ object EventOps {
         val docs = graft.Tables.ld(ss, d, "documents")
         val seen = docs.filter(col("doc_id") % 5 =!= 0)
           .select(md5(col("text")).as("fp"))
-        val rawSchema = ss.read.parquet(s"$d/documents.parquet").schema
+        val rawSchema = Tables.schemaOf(ss, s"$d/documents.parquet")
         val name = "graft_stream_incr_dedup"
         val q = ss.readStream.schema(rawSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -511,7 +511,7 @@ object EventOps {
             s"stack(8, ${(0 until 8).map(j =>
               s"$j, cast(shiftright(snap64, ${8 * j}) & 255 as int)")
               .mkString(", ")}) AS (band_idx, band_val)")
-        val rawSchema = ss.read.parquet(s"$d/documents.parquet").schema
+        val rawSchema = Tables.schemaOf(ss, s"$d/documents.parquet")
         val name = "graft_stream_neardup"
         val q = ss.readStream.schema(rawSchema)
           .option("pathGlobFilter", "documents.parquet").parquet(d)
@@ -552,7 +552,7 @@ object EventOps {
     // stays on the watermarked TIMESTAMP columns (required for state
     // eviction analysis); the oracle mirrors it in epoch_us arithmetic.
     "q85_stream_stream_join" -> ((s, d) => withStreamSession(s, 4) { ss =>
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       def src = ss.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
         .transform(Tables.normalizeEventsTs)
@@ -773,7 +773,7 @@ object EventOps {
     // every stateful demo here.
     "q186_transform_with_state" -> ((s, d) => withStreamSession(s, 8) { ss =>
       import ss.implicits._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       val name = "graft_tws"
       val q = ss.readStream.schema(rawSchema)
         .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -930,7 +930,7 @@ object EventOps {
     // reorder float addition, integer cents don't care — the q74 stance.
     "q205_stream_session_window" -> ((s, d) =>
       withStreamSession(s, 8) { ss =>
-        val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+        val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
         val name = "graft_stream_sessw"
         val q = ss.readStream.schema(rawSchema)
           .option("pathGlobFilter", "events.parquet").parquet(d)
@@ -1607,7 +1607,7 @@ object EventOps {
     "q281_stream_foreachbatch" -> ((s, d) => withStreamSession(s, 8) {
       ss =>
       import scala.jdk.CollectionConverters._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       val merged = new java.util.concurrent.ConcurrentHashMap[
         java.lang.Long, Map[String, Long]]()
       val naive = java.util.Collections.synchronizedList(
@@ -2460,7 +2460,7 @@ object EventOps {
     "q304_stream_dead_letter" -> ((s, d) => withStreamSession(s, 8) {
       ss =>
       import scala.jdk.CollectionConverters._
-      val rawSchema = ss.read.parquet(s"$d/events.parquet").schema
+      val rawSchema = Tables.schemaOf(ss, s"$d/events.parquet")
       // (batchId, lane) -> per-type (n, ksum); MERGE semantics per slot
       val store = new java.util.concurrent.ConcurrentHashMap[
         (Long, String), Map[String, (Long, Long)]]()

@@ -765,7 +765,7 @@ object TextOps {
       // item 4). Two changes, output bit-identical (oracle replays the
       // same chained CTEs):
       //
-      // 1. The winning pair comes to the DRIVER as one 1-row head() per
+      // 1. The winning pair comes to the DRIVER as one 1-row take(1) per
       //    round — the same driver-steers-the-loop pattern as the CC
       //    loop's observed convergence metric (a merge table is
       //    driver-resident in every real BPE trainer). This kills the
@@ -793,10 +793,15 @@ object TextOps {
       //    100 TB invariant: vocab-sized, not corpus-sized) and replaces
       //    per-round corpus-wide exchanges — the q127 trade, measured.
       val merged = Seq.newBuilder[(Int, String, String, Long)]
-      for (k <- 1 to K) {
+      // A corpus can run out of adjacent pairs before K rounds (every word
+      // already one symbol): the loop then stops and keeps the merges made
+      // so far — the oracle's later best$k CTEs are empty the same way.
+      var k = 1
+      var exhausted = false
+      while (k <= K && !exhausted) {
         // 1-row argmax, deterministic total order (cnt desc, then the
         // pair itself — (a,b) is unique post-group)
-        val bestRow = vocab
+        val best = vocab
           .select(col("freq"), col("syms"),
             posexplode(col("syms")).as(Seq("p", "s")))
           .withColumn("nxt", get(col("syms"), col("p") + 1))
@@ -804,32 +809,36 @@ object TextOps {
           .groupBy(col("s").as("a"), col("nxt").as("b"))
           .agg(sum("freq").as("cnt"))
           .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
-          .head()
-        val (ba, bb, bc) =
-          (bestRow.getString(0), bestRow.getString(1), bestRow.getLong(2))
-        merged += ((k, ba, bb, bc))
-        // greedy left-to-right merge of (ba, bb): one pass over syms.
-        // acc = (res: rewritten prefix, skip: next symbol already
-        // consumed by the merge just emitted). get() is 0-based and NULL
-        // past the end (safe under ANSI, unlike element_at).
-        val newSyms = aggregate(
-          sequence(lit(1), size(col("syms"))),
-          struct(array().cast("array<string>").as("res"),
-            lit(false).as("skip")),
-          (acc, i) => {
-            val cur = get(col("syms"), i - 1)
-            val nxt = get(col("syms"), i)
-            when(acc("skip"),
-              struct(acc("res").as("res"), lit(false).as("skip")))
-              .when(cur === lit(ba) && nxt === lit(bb),
-                struct(concat(acc("res"), array(concat(cur, nxt)))
-                  .as("res"), lit(true).as("skip")))
-              .otherwise(struct(concat(acc("res"), array(cur)).as("res"),
-                lit(false).as("skip")))
-          },
-          acc => acc("res"))
-        vocab = vocab.select(col("w"), col("freq"), newSyms.as("syms"))
-          .localCheckpoint()
+          .take(1)
+        if (best.isEmpty) exhausted = true
+        else {
+          val (ba, bb, bc) =
+            (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
+          merged += ((k, ba, bb, bc))
+          // greedy left-to-right merge of (ba, bb): one pass over syms.
+          // acc = (res: rewritten prefix, skip: next symbol already
+          // consumed by the merge just emitted). get() is 0-based and NULL
+          // past the end (safe under ANSI, unlike element_at).
+          val newSyms = aggregate(
+            sequence(lit(1), size(col("syms"))),
+            struct(array().cast("array<string>").as("res"),
+              lit(false).as("skip")),
+            (acc, i) => {
+              val cur = get(col("syms"), i - 1)
+              val nxt = get(col("syms"), i)
+              when(acc("skip"),
+                struct(acc("res").as("res"), lit(false).as("skip")))
+                .when(cur === lit(ba) && nxt === lit(bb),
+                  struct(concat(acc("res"), array(concat(cur, nxt)))
+                    .as("res"), lit(true).as("skip")))
+                .otherwise(struct(concat(acc("res"), array(cur)).as("res"),
+                  lit(false).as("skip")))
+            },
+            acc => acc("res"))
+          vocab = vocab.select(col("w"), col("freq"), newSyms.as("syms"))
+            .localCheckpoint()
+          k += 1
+        }
       }
       import s.implicits._
       merged.result()

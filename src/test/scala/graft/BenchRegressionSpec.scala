@@ -134,6 +134,17 @@ class BenchRegressionSpec extends AnyFunSuite {
     assert(BenchCompare.parse(lines).keySet == Set("q_x"))
   }
 
+  test("string values with escaped quotes parse as JSON, not as text") {
+    // a decoy "sec": inside a string and a quote inside the sf path: a
+    // text scan for `"sec":` or the next `"` reads both wrong
+    val lines = Seq(
+      """{"bench_meta":{"sf":"/data/sf \"0.1\"","iters":3,"cpus":8}}""",
+      """{"bench_query":"q_x","note":"was \"sec\":9.0 before","sec":1.0,"ratio":2.0}""")
+    assert(BenchCompare.parse(lines) == Map("q_x" -> BenchCompare.Entry(2.0, 1.0)))
+    assert(BenchCompare.metaSf(lines).contains("/data/sf \"0.1\""))
+    assert(BenchCompare.metaCpus(lines).contains("8"))
+  }
+
   test("live gate: fresh local detail vs newest committed round detail") {
     val fresh = new java.io.File("target/bench_detail.jsonl")
     val committed = BenchCompare.newestCommitted()
